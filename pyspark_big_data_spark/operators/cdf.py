@@ -55,11 +55,13 @@ read-only; this is extension surface (VERDICT r12 next-step #2).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from pyspark_big_data_spark.operators.deletes import (
     BROADCAST_THRESHOLD_ROWS,
     FILE_COL,
     POS_COL,
+    VECTOR_SCHEMA,
     _embedded_deletes_dir,
     _guard_reserved_address_cols,
     _qualified_file_expr,
@@ -67,9 +69,10 @@ from pyspark_big_data_spark.operators.deletes import (
     list_pos_delete_commits,
 )
 from pyspark_big_data_spark.operators.versioned import (
+    _driver_readable,
+    chain_schema,
     list_versions,
     manifest,
-    read_version,
 )
 
 CHANGE_TYPE_COL = "_change_type"
@@ -140,28 +143,22 @@ def _range_commits(
     return sorted(chain)
 
 
-def _aligned_to(df: DataFrame, head: DataFrame) -> DataFrame:
-    """Null-fill ``df`` to the head snapshot's columns (schema
-    evolution: a pre-evolution delta or preimage file lacks late
-    columns) and fix column order."""
-    have = set(df.columns)
-    for field in head.schema.fields:
-        if field.name not in have:
-            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return df.select(*[field.name for field in head.schema.fields])
-
-
-def _delta_rows(spark: SparkSession, root: str, v: int, head: DataFrame) -> DataFrame:
+def _delta_rows(
+    spark: SparkSession, root: str, v: int, schema: StructType
+) -> DataFrame:
+    """``v``'s own delta files bound to the head's chain ``schema``: a
+    pre-evolution delta null-fills the late columns, and the columns
+    come in head order."""
     d = f"{root.rstrip('/')}/v={v}"
     spark.catalog.refreshByPath(d)
-    return _aligned_to(spark.read.parquet(d), head)
+    return spark.read.schema(schema).parquet(d)
 
 
 def _preimage_rows(
     spark: SparkSession,
     root: str,
     v: int,
-    head: DataFrame,
+    schema: StructType,
     broadcast_threshold_rows: int,
 ) -> DataFrame | None:
     """The rows retired by ``v``'s embedded vector, read back from the
@@ -173,7 +170,7 @@ def _preimage_rows(
     if emb is None:
         return None
     spark.catalog.refreshByPath(emb)
-    vec = spark.read.parquet(emb).select(FILE_COL, POS_COL).distinct()
+    vec = spark.read.schema(VECTOR_SCHEMA).parquet(emb).distinct()
     # one relative path string per touched file — the same driver-side
     # cardinality every file-pruning plan here carries. Read straight
     # off the vector parquet ON THE DRIVER (one column, pyarrow): the
@@ -181,8 +178,6 @@ def _preimage_rows(
     # job per vector-bearing commit in every typed-feed walk. Remote
     # roots (hdfs://, s3a://, ...) keep the Spark collect — pyarrow
     # cannot open them (r13 advice item).
-    from pyspark_big_data_spark.operators.versioned import _driver_readable
-
     if _driver_readable(emb):
         import pyarrow.dataset as pads
 
@@ -207,7 +202,9 @@ def _preimage_rows(
     paths = [f"{root.rstrip('/')}/{rel}" for rel in touched]
     for d in sorted({p.rsplit("/", 1)[0] for p in paths}):
         spark.catalog.refreshByPath(d)
-    files = spark.read.option("mergeSchema", "true").parquet(*paths)
+    # the head's chain schema null-fills late columns in pre-evolution
+    # ancestor files and fixes the column order
+    files = spark.read.schema(schema).parquet(*paths)
     _guard_reserved_address_cols(files)
     addressed = files.select(
         _qualified_file_expr().alias(FILE_COL),
@@ -219,8 +216,7 @@ def _preimage_rows(
     side = vec
     if n is None or int(n) <= broadcast_threshold_rows:
         side = F.broadcast(vec)
-    pre = addressed.join(side, [FILE_COL, POS_COL], "inner").drop(FILE_COL, POS_COL)
-    return _aligned_to(pre, head)
+    return addressed.join(side, [FILE_COL, POS_COL], "inner").drop(FILE_COL, POS_COL)
 
 
 def _commit_merge_keys(
@@ -237,15 +233,15 @@ def _typed_version(
     spark: SparkSession,
     root: str,
     v: int,
-    head: DataFrame,
+    schema: StructType,
     merge_keys,
     broadcast_threshold_rows: int,
 ) -> DataFrame:
     """One commit's typed change rows (head columns + _change_type +
     _commit_version)."""
-    cols = head.columns
-    delta = _delta_rows(spark, root, v, head)
-    pre = _preimage_rows(spark, root, v, head, broadcast_threshold_rows)
+    cols = schema.names
+    delta = _delta_rows(spark, root, v, schema)
+    pre = _preimage_rows(spark, root, v, schema, broadcast_threshold_rows)
     mutation = (manifest(spark, root, v) or {}).get("row_mutation")
     if pre is None:
         typed = delta.withColumn(CHANGE_TYPE_COL, F.lit(INSERT))
@@ -311,23 +307,21 @@ def table_changes_typed(
 
     ``from_version == to_version`` is an empty feed with the correct
     schema."""
-    head = read_version(spark, root, to_version)
-    if {CHANGE_TYPE_COL, COMMIT_VERSION_COL} & set(head.columns):
-        raise ValueError(
-            f"table schema uses reserved CDF column(s) "
-            f"{sorted({CHANGE_TYPE_COL, COMMIT_VERSION_COL} & set(head.columns))}"
-        )
+    schema = chain_schema(spark, root, to_version)
+    clash = {CHANGE_TYPE_COL, COMMIT_VERSION_COL} & set(schema.names)
+    if clash:
+        raise ValueError(f"table schema uses reserved CDF column(s) {sorted(clash)}")
     commits = _range_commits(spark, root, from_version, to_version)
     if not commits:
         return (
-            head.filter(F.lit(False))
+            spark.createDataFrame([], schema)
             .withColumn(CHANGE_TYPE_COL, F.lit(None).cast("string"))
             .withColumn(COMMIT_VERSION_COL, F.lit(None).cast("long"))
         )
     out = None
     for v in commits:
         t = _typed_version(
-            spark, root, v, head, merge_keys, broadcast_threshold_rows
+            spark, root, v, schema, merge_keys, broadcast_threshold_rows
         )
         out = t if out is None else out.unionByName(t)
     return out

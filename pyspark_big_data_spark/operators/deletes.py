@@ -64,16 +64,20 @@ full-rewrite variant is operators/upsert.py::erase_keys_parquet).
 from __future__ import annotations
 
 import json
-import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pyspark_big_data_spark.operators.versioned import (
     EMBEDDED_DELETES_DIR,
     _fs,
+    _read_selected_aligned,
     _resolve_version,
+    chain_schema,
     commit_staged,
+    index_cols,
+    list_numbered_dirs,
     list_versions,
     manifest,
     read_version,
@@ -83,8 +87,6 @@ from pyspark_big_data_spark.operators.versioned import (
 )
 
 DELETES_DIR = "_deletes"
-
-_D_RE = re.compile(r"^d=(\d+)$")
 
 # Default ceiling for broadcasting the tombstone side of the MOR
 # anti-join: ~10M keys (~100-200 MB serialized) is the upper edge of a
@@ -105,18 +107,7 @@ def _versions_with_vector_dirs(spark: SparkSession, root: str, sub: str) -> set[
     whose vectors are MERGE-embedded, not external) proves there is
     nothing to list. Always a LIVE listing, never memoized: external
     vectors are mutable post-commit (r13 memory note)."""
-    proot = f"{root.rstrip('/')}/{sub}"
-    fs, hroot, jvm = _fs(spark, proot)
-    if not fs.exists(hroot):
-        return set()
-    out: set[int] = set()
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = re.match(r"^v=(\d+)$", status.getPath().getName())
-        if m:
-            out.add(int(m.group(1)))
-    return out
+    return set(list_numbered_dirs(spark, f"{root.rstrip('/')}/{sub}", "v="))
 
 
 def list_delete_commits(
@@ -125,18 +116,7 @@ def list_delete_commits(
     """Committed delete-commit ids against ``v=version``, ascending.
     Like versions, a commit counts iff its dir sits at ``d=K`` (the
     rename is the commit); staging dirs never match."""
-    droot = _deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = _D_RE.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return list_numbered_dirs(spark, _deletes_root(root, version), "d=")
 
 
 def _write_rows_sidecar(spark, fs, jvm, staging: str) -> None:
@@ -193,7 +173,7 @@ def delete_keys(
     version = _resolve_version(spark, root, version)
     if version not in list_versions(spark, root):
         raise ValueError(f"version {version} does not exist under {root}")
-    snap_cols = read_version(spark, root, version).columns
+    snap_cols = chain_schema(spark, root, version).names
     if key not in snap_cols:
         raise ValueError(
             f"delete key {key!r} is not a column of v={version} "
@@ -288,6 +268,11 @@ POS_DELETES_DIR = "_pos_deletes"
 FILE_COL = "_file"
 POS_COL = "_pos"
 _MEMBER_COL = "_member_version"
+# every positional vector (external, legacy or MERGE-embedded) has
+# exactly this schema, so its reads bind it instead of inferring it
+VECTOR_SCHEMA = StructType(
+    [StructField(FILE_COL, StringType()), StructField(POS_COL, LongType())]
+)
 
 
 def _qualified_file_expr():
@@ -339,18 +324,7 @@ def _embedded_deletes_dir(
 def list_pos_delete_commits(
     spark: SparkSession, root: str, version: int
 ) -> list[int]:
-    droot = _pos_deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = _D_RE.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return list_numbered_dirs(spark, _pos_deletes_root(root, version), "d=")
 
 
 def has_any_delete_vectors(
@@ -557,10 +531,6 @@ def read_version_mor(
         if pruned_col is not None:
             raise ValueError("pass pruned_col OR selected_files, not both")
         if selected_files:
-            from pyspark_big_data_spark.operators.versioned import (
-                _read_selected_aligned,
-            )
-
             base = _read_selected_aligned(spark, root, version, selected_files)
         else:
             base = read_version(spark, root, version).filter(F.lit(False))
@@ -610,7 +580,7 @@ def read_version_mor(
         # within itself by construction (a retired row is invisible to
         # later merges, delete_keys writes distinct). The distinct was
         # a full shuffle re-paid on EVERY evaluation of every MOR plan.
-        tomb = spark.read.parquet(*pos_paths).select(FILE_COL, POS_COL)
+        tomb = spark.read.schema(VECTOR_SCHEMA).parquet(*pos_paths)
         if hint:
             tomb = F.broadcast(tomb)
         base = base.join(tomb, [FILE_COL, POS_COL], "left_anti")
@@ -621,7 +591,7 @@ def read_version_mor(
         # so the basename is unambiguous within a chain)
         for p in legacy_pos:
             spark.catalog.refreshByPath(p)
-        ltomb = spark.read.parquet(*legacy_pos).select(
+        ltomb = spark.read.schema(VECTOR_SCHEMA).parquet(*legacy_pos).select(
             F.col(FILE_COL).alias("__legacy_file"),
             F.col(POS_COL).alias("__legacy_pos"),
         )  # no distinct: anti-join semantics (see the pos_paths note)
@@ -705,9 +675,7 @@ def materialize_deletes(
         raise ValueError(
             f"v={version} under {root} has no tombstones to materialize"
         )
-    m = manifest(spark, root, version)
-    stats_cols = list(m["stats_cols"]) if m and m.get("stats_cols") else None
-    bloom_cols = list(m["bloom_cols"]) if m and m.get("bloom_cols") else None
+    stats_cols, bloom_cols = index_cols(spark, root, version)
     extra = dict(manifest_extra or {})
     if "writer_batch_ids" not in extra:
         markers = chain_writer_markers(spark, root, version)

@@ -73,7 +73,8 @@ from pyspark_big_data_spark.operators.deletes import (
 from pyspark_big_data_spark.operators.versioned import (
     _resolve_version,
     append_version,
-    read_version,
+    chain_schema,
+    index_cols,
 )
 
 
@@ -182,7 +183,7 @@ def merge_into(
     the global latest, with WriteConflict protection."""
     keys = [key] if isinstance(key, str) else list(key)
     version = _resolve_version(spark, root, base_version)
-    target_schema = read_version(spark, root, version).schema
+    target_schema = chain_schema(spark, root, version)
     target_cols = [f.name for f in target_schema.fields]
     for k in keys:
         if k not in target_cols:
@@ -701,7 +702,10 @@ def delete_where(
     ``condition`` is SQL over the table's own column names (or a
     Column). Returns ``{"version", "n_deleted"}``; matching nothing
     burns no version number. One target pass; rows the condition
-    cannot match are never rewritten (the vector is O(matches))."""
+    cannot match are never rewritten (the vector is O(matches)). The
+    commit carries the head manifest's ``stats_cols`` / ``bloom_cols``
+    forward, so pruned reads and merge file-skipping keep working on
+    every later head."""
     version = _resolve_version(spark, root, base_version)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     target = read_version_mor(spark, root, version, keep_addresses=True)
@@ -711,10 +715,13 @@ def delete_where(
         if n == 0:
             return {"version": None, "n_deleted": 0}
         vector = hit.select(FILE_COL, POS_COL)
-        empty = read_version(spark, root, version).filter(F.lit(False))
+        empty = spark.createDataFrame([], chain_schema(spark, root, version))
+        stats_cols, bloom_cols = index_cols(spark, root, version)
         new_v = append_version(
             empty,
             root,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
             allow_base_tombstones=True,
             expected_base=None if base_version is not None else version,
             base_override=version if base_version is not None else None,
@@ -745,9 +752,12 @@ def update_where(
     The manifest records ``row_mutation: update`` so the typed change
     feed types this commit's rows update_preimage/update_postimage
     without needing merge keys. Returns ``{"version", "n_updated"}``;
-    matching nothing burns no version number."""
+    matching nothing burns no version number. Like ``delete_where``,
+    the commit carries the head manifest's ``stats_cols`` /
+    ``bloom_cols`` forward."""
     version = _resolve_version(spark, root, base_version)
-    target_cols = read_version(spark, root, version).columns
+    target_schema = chain_schema(spark, root, version)
+    target_cols = target_schema.names
     bad = set(set_exprs) - set(target_cols)
     if bad:
         raise ValueError(
@@ -768,15 +778,18 @@ def update_where(
         vector = hit.select(FILE_COL, POS_COL)
         updated = hit.select(
             *[
-                F.expr(set_exprs[c]).cast(target.schema[c].dataType).alias(c)
+                F.expr(set_exprs[c]).cast(target_schema[c].dataType).alias(c)
                 if c in set_exprs
                 else F.col(c)
                 for c in target_cols
             ]
         )
+        stats_cols, bloom_cols = index_cols(spark, root, version)
         new_v = append_version(
             updated,
             root,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
             allow_base_tombstones=True,
             expected_base=None if base_version is not None else version,
             base_override=version if base_version is not None else None,

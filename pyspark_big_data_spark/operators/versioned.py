@@ -18,9 +18,11 @@ Each snapshot may carry a ``_manifest.json`` committed ATOMICALLY with
 its data by the same rename: per-file [min, max] footer stats
 (``read_version_pruned`` skips files by range predicate before Spark
 lists them), per-file row counts (``snapshot_row_count`` answers
-COUNT(*) with zero data pages), and optional per-file Bloom filters
+COUNT(*) with zero data pages), optional per-file Bloom filters
 (``read_version_point`` pins an equality probe to ~1 file on
-hash-scattered keys where min/max can't help). ``expire_versions`` is
+hash-scattered keys where min/max can't help), and the version's chain
+``schema`` (``chain_schema``: every read binds it instead of running a
+schema-inference job). ``expire_versions`` is
 the retention vacuum; ``snapshot_min_max`` answers MIN/MAX from the
 same stats. ``manifest_shard_files`` shards the manifest into a
 manifest list (per-shard JSON files) so no single metadata file grows
@@ -56,36 +58,109 @@ import os
 import re
 import time
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+
+# The Hadoop ``Path`` class and one ``FileSystem`` handle per
+# (scheme, authority), for the session whose JVM context is ``jsc``.
+# Resolving ``jvm.org.apache.hadoop.fs.Path`` costs one py4j round trip
+# per name segment, and ``getFileSystem`` another two, on every call;
+# Hadoop caches the FileSystem itself, so holding it here changes no
+# semantics. A new SparkContext (a different ``jsc``) starts afresh.
+_HADOOP: dict = {}
 
 
 def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+    jsc = spark._jsc
+    if _HADOOP.get("jsc") is not jsc:
+        _HADOOP.clear()
+        _HADOOP.update(
+            jsc=jsc, Path=spark._jvm.org.apache.hadoop.fs.Path, fs={}
+        )
+    hpath = _HADOOP["Path"](path)
+    key = urlparse(str(path))[:2]
+    fs = _HADOOP["fs"].get(key)
+    if fs is None:
+        fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+        _HADOOP["fs"][key] = fs
+    return fs, hpath, spark._jvm
 
 
-_V_RE = re.compile(r"^v=(\d+)$")
+def _driver_readable(path: str) -> bool:
+    """True when ``path`` is POSIX-readable from the driver process
+    (no scheme, or an explicit file:), so pyarrow and ``os`` fast paths
+    may read it directly. Remote filesystems (hdfs://, s3a://, ...)
+    fall back to the Hadoop/Spark paths that work on any Hadoop
+    filesystem — the r13 driver-side footer/vector reads silently
+    assumed a local root (r13 advice item)."""
+    return urlparse(str(path)).scheme in ("", "file")
+
+
+def _local_path(path: str) -> str:
+    """The POSIX path of a driver-readable ``path`` (``file:`` URIs
+    lose their scheme)."""
+    parsed = urlparse(str(path))
+    return parsed.path if parsed.scheme == "file" else str(path)
+
+
+def _list_dir_local(directory: str) -> tuple[str, list[tuple[str, bool]]]:
+    """``_list_dir`` for a driver-readable directory: one
+    ``os.scandir``, zero py4j calls. Hides checksum files
+    (``.<name>.crc``) as Hadoop's local filesystem does."""
+    local = os.path.abspath(_local_path(directory))
+    try:
+        with os.scandir(local) as it:
+            return local, [
+                (e.name, e.is_dir())
+                for e in it
+                if not (e.name.startswith(".") and e.name.endswith(".crc"))
+            ]
+    except (FileNotFoundError, NotADirectoryError):
+        return local, []
+
+
+def _list_dir_hadoop(
+    spark: SparkSession, directory: str
+) -> tuple[str, list[tuple[str, bool]]]:
+    """``_list_dir`` through the Hadoop FileSystem (any scheme)."""
+    fs, hdir, _ = _fs(spark, directory)
+    base = str(fs.makeQualified(hdir).toUri().getPath()).rstrip("/")
+    if not fs.exists(hdir):
+        return base, []
+    return base, [
+        (st.getPath().getName(), bool(st.isDirectory()))
+        for st in fs.listStatus(hdir)
+    ]
+
+
+def _list_dir(spark: SparkSession, directory: str) -> tuple[str, list[tuple[str, bool]]]:
+    """``(dir_path, [(name, is_dir), ...])``: the entries directly under
+    ``directory``, with ``dir_path`` its absolute scheme-less path; no
+    entries when it does not exist. The one listing behind every
+    commit log and file census here. Local roots (the
+    ``_driver_readable`` rule) list with ``os.scandir``; other schemes
+    keep the Hadoop listing, which pays three py4j calls per entry."""
+    if _driver_readable(directory):
+        return _list_dir_local(directory)
+    return _list_dir_hadoop(spark, directory)
 
 
 def list_numbered_dirs(spark: SparkSession, root: str, prefix: str) -> list[int]:
     """Committed ``<prefix>N`` directory numbers under ``root``,
     ascending — the one listing every commit-by-rename log uses
-    (versions ``v=``, delete commits ``d=``, branch entries ``s=``,
-    transaction manifests ``t=``). Staging/temp dirs never match."""
+    (versions ``v=``, delete commits ``d=``, vector dirs per version,
+    branch entries ``s=``, transaction manifests ``t=``). Staging/temp
+    dirs and plain files never match."""
     pat = re.compile(rf"^{re.escape(prefix)}(\d+)$")
-    fs, hroot, jvm = _fs(spark, root)
-    if not fs.exists(hroot):
-        return []
-    out = []
-    for status in fs.listStatus(hroot):
-        if not status.isDirectory():
-            continue
-        m = pat.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    _, entries = _list_dir(spark, root)
+    return sorted(
+        int(m.group(1))
+        for name, is_dir in entries
+        if is_dir and (m := pat.match(name))
+    )
 
 
 def list_versions(spark: SparkSession, root: str) -> list[int]:
@@ -346,18 +421,6 @@ _DRIVER_STATS_MAX_FILES = int(
 )
 
 
-def _driver_readable(path: str) -> bool:
-    """True when ``path`` is POSIX-readable from the driver process
-    (no scheme, or an explicit file:), so pyarrow fast paths may read
-    it directly. Remote filesystems (hdfs://, s3a://, ...) fall back to
-    the Spark read that works on any Hadoop filesystem — the r13
-    driver-side footer/vector reads silently assumed a local root
-    (r13 advice item)."""
-    from urllib.parse import urlparse
-
-    return urlparse(str(path)).scheme in ("", "file")
-
-
 def _collect_file_stats(
     spark: SparkSession, file_paths: list[str], stats_cols: list[str]
 ) -> dict[str, dict[str, list] | None]:
@@ -428,14 +491,15 @@ def _collect_file_stats(
     return stats, nulls, num_rows
 
 
-def _list_parquet_files(fs, jvm, directory: str) -> list[str]:
-    Path = jvm.org.apache.hadoop.fs.Path
-    out = []
-    for status in fs.listStatus(Path(directory)):
-        name = status.getPath().getName()
-        if status.isFile() and name.endswith(".parquet"):
-            out.append(str(status.getPath().toUri().getPath()))
-    return sorted(out)
+def _list_parquet_files(spark: SparkSession, directory: str) -> list[str]:
+    """Absolute scheme-less paths of the parquet files directly under
+    ``directory``, sorted."""
+    base, entries = _list_dir(spark, directory)
+    return sorted(
+        f"{base}/{name}"
+        for name, is_dir in entries
+        if not is_dir and name.endswith(".parquet")
+    )
 
 
 def _read_json(fs, jvm, path: str) -> dict:
@@ -451,7 +515,11 @@ def manifest(
     spark: SparkSession, root: str, version: int, _cache: dict | None = None
 ) -> dict | None:
     """The committed footer-stats manifest of ``v=version`` (None when
-    the snapshot was written without ``stats_cols``).
+    the snapshot was written without ``stats_cols``). Besides the
+    per-file entries it holds commit facts: ``committed_at``,
+    ``base_version`` (appends), ``pos_delete_rows`` (embedded vectors),
+    ``schema`` (the chain schema, see ``chain_schema``) and caller
+    ``manifest_extra`` keys.
 
     ``_cache`` (internal): a per-OPERATION memo dict — manifests of
     committed versions are immutable, so callers that walk the version
@@ -509,6 +577,140 @@ def manifest(
         merged["blooms"] = blooms
     merged["n_shards"] = len(doc["shards"])
     return _done(merged)
+
+
+def index_cols(
+    spark: SparkSession, root: str, version: int
+) -> tuple[list[str] | None, list[str] | None]:
+    """``(stats_cols, bloom_cols)`` of ``v=version``'s manifest (None
+    for each one it lacks): what a commit rewriting or extending that
+    version carries forward, so pruned reads and point lookups keep
+    working on every later head."""
+    m = manifest(spark, root, version) or {}
+    return (
+        list(m["stats_cols"]) if m.get("stats_cols") else None,
+        list(m["bloom_cols"]) if m.get("bloom_cols") else None,
+    )
+
+
+# Every Spark parquet writer records the written schema under this
+# footer key; Spark's parquet reader binds it (all fields nullable).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """``DataType.asNullable``: what a file-source read makes of a
+    written schema."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _staged_schema(
+    spark: SparkSession, staging: str, files: list[str]
+) -> StructType | None:
+    """The schema Spark's parquet reader binds for a staged write (one
+    write: every file carries the same schema). Local roots: the first
+    footer's Spark schema key, read by pyarrow (no job). Other schemes:
+    Spark's own inference over the staged dir. None when there is no
+    file or the footer carries no Spark schema."""
+    if not files:
+        return None
+    if not _driver_readable(staging):
+        return spark.read.parquet(staging).schema
+    import pyarrow.parquet as papq
+
+    raw = (papq.read_metadata(files[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    try:
+        return _as_nullable(StructType.fromJson(json.loads(raw)))
+    except (ValueError, KeyError, TypeError):
+        return None
+
+
+def _merge_schemas(left: StructType, right: StructType) -> StructType | None:
+    """``StructType.merge`` as ``mergeSchema`` applies it: left's
+    fields, then right's new ones in right's order. None where Spark
+    would widen a type or merge names case-insensitively; the caller
+    then records nothing rather than a guess."""
+    fields = list(left.fields)
+    seen = {f.name.lower(): f for f in fields}
+    for f in right.fields:
+        have = seen.get(f.name.lower())
+        if have is None:
+            fields.append(f)
+            seen[f.name.lower()] = f
+        elif have.name != f.name or have.dataType != f.dataType:
+            return None
+    return StructType(fields)
+
+
+def _committed_chain_schema(
+    spark: SparkSession,
+    root: str,
+    n: int,
+    base_version: int | None,
+    own: StructType | None,
+) -> StructType | None:
+    """The chain schema ``v=n`` will read as, computed at commit time
+    from its own staged schema ``own`` and its base's chain schema —
+    None when that cannot be done exactly.
+
+    ``mergeSchema`` folds the member files in PATH order, so ``v=10/``
+    comes before ``v=9/``. Base-then-delta is that fold when the delta
+    sorts after every base member, or when it lists the base columns in
+    the base's order ahead of its new ones (an append carries every
+    base column, so the fold then lands on the same order wherever the
+    delta sorts)."""
+    if own is None or base_version is None:
+        return own
+    base = chain_schema(spark, root, base_version)
+    merged = _merge_schemas(base, own)
+    if merged is None:
+        return None
+    if own.names[: len(base.names)] == base.names or all(
+        f"v={m}/" < f"v={n}/" for m in version_chain(spark, root, base_version)
+    ):
+        return merged
+    return None
+
+
+def chain_schema(spark: SparkSession, root: str, version: int) -> StructType:
+    """The schema ``read_version(v)`` returns: the schema ``mergeSchema``
+    infers over the chain's member dirs, field order and nullability
+    included. Manifests record it at commit time (``schema``), so
+    binding it costs no Spark job; a version without it (manifest-less,
+    or committed before the key existed) infers it once. Either way
+    the answer is memoized per (root, version)."""
+    cached = _meta_cache_get("chain_schema", root, version)
+    if cached is not None:
+        return cached
+    m = manifest(spark, root, version)
+    if m is not None and "schema" in m:
+        schema = StructType.fromJson(m["schema"])
+    else:
+        dirs = [
+            f"{root.rstrip('/')}/v={v}" for v in version_chain(spark, root, version)
+        ]
+        for d in dirs:
+            spark.catalog.refreshByPath(d)
+        # a chain may have evolved additively (append_version
+        # allow_evolution): merge member schemas — the default reader
+        # would bind one file's schema and silently drop late columns
+        reader = spark.read.option("mergeSchema", "true") if len(dirs) > 1 else spark.read
+        schema = reader.parquet(*dirs).schema
+    _meta_cache_put("chain_schema", root, version, schema)
+    return schema
 
 
 class AuditFailed(RuntimeError):
@@ -598,13 +800,21 @@ def write_version(
     ``(_file string, _pos long)`` (operators/deletes.py addresses).
 
     Every manifest carries ``committed_at`` (epoch seconds at commit
-    build time) for AS-OF-TIMESTAMP resolution (``version_as_of``)."""
+    build time) for AS-OF-TIMESTAMP resolution (``version_as_of``), and
+    ``schema``: the version's CHAIN schema (``StructType.jsonValue()``,
+    exactly what ``read_version`` returns), taken from the staged
+    footers and, for an append, the base's chain schema — so readers
+    bind it (``chain_schema``) instead of running a schema-inference
+    job. The key is left out when it cannot be derived exactly (a type
+    or case conflict between base and delta, or a reordered delta that
+    sorts before a base member in ``mergeSchema``'s path order); such
+    versions infer their schema on first read, like manifest-less ones."""
     if manifest_extra:
         reserved = {
             "manifest_version", "sharded", "shards", "stats_cols",
             "bloom_cols", "files", "file_rows", "blooms",
             "base_version", "n_shards", "committed_at", "pos_delete_rows",
-            "ndv_cols", "ndv",
+            "ndv_cols", "ndv", "schema",
         } & set(manifest_extra)
         if reserved:
             raise ValueError(
@@ -692,15 +902,18 @@ def write_version(
 
                 pos_delete_rows = sum(
                     papq.ParquetFile(p).metadata.num_rows
-                    for p in _list_parquet_files(fs, jvm, emb)
+                    for p in _list_parquet_files(spark, emb)
                 )
             else:  # remote root: Spark's parquet count is footer-only too
                 spark.catalog.refreshByPath(emb)
                 pos_delete_rows = spark.read.parquet(emb).count()
         if stats_cols or bloom_cols or ndv_cols or _append or manifest_extra:
-            files = _list_parquet_files(fs, jvm, staging)
+            files = _list_parquet_files(spark, staging)
             stats, file_nulls, file_rows = _collect_file_stats(
                 spark, files, list(stats_cols or [])
+            )
+            schema = _committed_chain_schema(
+                spark, root, n, base_version, _staged_schema(spark, staging, files)
             )
             blooms = (
                 _build_file_blooms(spark, staging, list(bloom_cols))
@@ -761,6 +974,8 @@ def write_version(
                     doc["ndv"] = ndv
                 if base_version is not None:
                     doc["base_version"] = base_version
+                if schema is not None:
+                    doc["schema"] = schema.jsonValue()
                 if pos_delete_rows is not None:
                     doc["pos_delete_rows"] = pos_delete_rows
                 if manifest_extra:
@@ -783,6 +998,8 @@ def write_version(
                     doc["ndv"] = ndv
                 if base_version is not None:
                     doc["base_version"] = base_version
+                if schema is not None:
+                    doc["schema"] = schema.jsonValue()
                 if pos_delete_rows is not None:
                     doc["pos_delete_rows"] = pos_delete_rows
                 if manifest_extra:
@@ -859,7 +1076,7 @@ def _validate_append_base(
         list_pos_delete_commits,
     )
 
-    base_cols = set(read_version(spark, root, base_version).columns)
+    base_cols = set(chain_schema(spark, root, base_version).names)
     if allow_evolution:
         missing = base_cols - set(delta_cols)
         if missing:
@@ -1049,36 +1266,17 @@ def read_version(
     version must fail loudly, never read as empty. An APPEND version
     (``append_version``) reads as its whole chain: the base snapshot's
     files plus every delta's, one multi-directory parquet scan."""
-    if version is None:
-        version = latest_version(spark, root)
-        if version is None:
-            raise ValueError(f"versioned dataset at {root} has no versions")
-    elif version not in list_versions(spark, root):
-        raise ValueError(f"version {version} does not exist under {root}")
+    version = _resolve_version(spark, root, version)
+    # version_chain raises when the version does not exist
     dirs = [
         f"{root.rstrip('/')}/v={v}" for v in version_chain(spark, root, version)
     ]
     for d in dirs:
         spark.catalog.refreshByPath(d)
-    # a committed chain's merged schema is immutable: re-reads bind the
-    # memoized schema explicitly, skipping the per-read schema
-    # inference (a distributed footer-merge job on multi-member
-    # chains). The parquet reader null-fills columns a pre-evolution
-    # file lacks when given an explicit schema — the same semantics
-    # the mergeSchema inference produces.
-    cached = _meta_cache_get("chain_schema", root, version)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(*dirs)
-    if len(dirs) == 1:
-        df = spark.read.parquet(dirs[0])
-    else:
-        # a chain may have evolved additively (append_version
-        # allow_evolution): merge member schemas and null-fill columns
-        # absent from pre-evolution files — the default reader would
-        # bind one file's schema and silently drop late columns
-        df = spark.read.option("mergeSchema", "true").parquet(*dirs)
-    _meta_cache_put("chain_schema", root, version, df.schema)
-    return df
+    # binding the chain schema skips per-read schema inference; the
+    # parquet reader null-fills columns a pre-evolution file lacks,
+    # the same semantics mergeSchema inference produces
+    return spark.read.schema(chain_schema(spark, root, version)).parquet(*dirs)
 
 
 def pruned_file_plan(
@@ -1132,27 +1330,17 @@ def _read_selected_aligned(
 ) -> DataFrame:
     """Read a pruned file subset with a PRUNING-INDEPENDENT schema.
 
-    On an evolved append chain, which files survive pruning decides
-    what ``mergeSchema`` can see: a predicate whose survivors all live
-    in pre-evolution members would return a frame MISSING the evolved
-    column(s), breaking the documented 'bit-identical to full read +
-    filter' equivalence (r10 advice, medium). So chain reads always
-    merge schemas and then reconcile to ``read_version``'s full chain
-    schema — null-filling any column absent from the selected subset
-    and fixing column order — regardless of which files survive. The
-    reconciliation is metadata-only (the full read is planned for its
-    schema, never executed)."""
+    On an evolved append chain, which files survive pruning must not
+    decide the result schema: a predicate whose survivors all live in
+    pre-evolution members must still return the evolved column(s),
+    null-filled, or the documented 'bit-identical to full read +
+    filter' equivalence breaks (r10 advice, medium). Binding the
+    version's chain schema gives exactly ``read_version``'s schema —
+    columns the survivors lack null-fill, order fixed — whatever
+    survives."""
     for d in sorted({os.path.dirname(p) for p in selected}):
         spark.catalog.refreshByPath(d)
-    if len(version_chain(spark, root, version)) == 1:
-        return spark.read.parquet(*selected)
-    df = spark.read.option("mergeSchema", "true").parquet(*selected)
-    full = read_version(spark, root, version).schema
-    have = set(df.columns)
-    for field in full.fields:
-        if field.name not in have:
-            df = df.withColumn(field.name, F.lit(None).cast(field.dataType))
-    return df.select(*[field.name for field in full.fields])
+    return spark.read.schema(chain_schema(spark, root, version)).parquet(*selected)
 
 
 def read_version_pruned(
@@ -1538,15 +1726,12 @@ def compact_version(
             "compacting the data files alone would resurrect deleted rows "
             "— run materialize_deletes first"
         )
-    fs, _, jvm = _fs(spark, root)
     # logical census: an append chain's file count spans every member
     files_before = sum(
-        len(_list_parquet_files(fs, jvm, f"{root.rstrip('/')}/v={v}"))
+        len(_list_parquet_files(spark, f"{root.rstrip('/')}/v={v}"))
         for v in version_chain(spark, root, version)
     )
-    m = manifest(spark, root, version)
-    stats_cols = list(m["stats_cols"]) if m else None
-    bloom_cols = list(m["bloom_cols"]) if m and m.get("bloom_cols") else None
+    stats_cols, bloom_cols = index_cols(spark, root, version)
 
     df = read_version(spark, root, version)
     if cluster_by is not None:
@@ -1564,7 +1749,7 @@ def compact_version(
         manifest_extra=manifest_extra,
     )
     files_after = len(
-        _list_parquet_files(fs, jvm, f"{root.rstrip('/')}/v={new_v}")
+        _list_parquet_files(spark, f"{root.rstrip('/')}/v={new_v}")
     )
     return {
         "version": new_v,
@@ -1670,11 +1855,10 @@ def snapshot_history(spark: SparkSession, root: str) -> list[dict]:
     data pages, zero Spark jobs). This is the audit-surface every table
     format exposes; tags from operators/refs.py give versions names,
     this gives them shapes."""
-    fs, _, jvm = _fs(spark, root)
     out = []
     for v in list_versions(spark, root):
         vdir = f"{root.rstrip('/')}/v={v}"
-        n_files = len(_list_parquet_files(fs, jvm, vdir))
+        n_files = len(_list_parquet_files(spark, vdir))
         m = manifest(spark, root, v)
         base = m.get("base_version") if m is not None else None
         # n_rows is the version's LOGICAL census: an append version

@@ -463,3 +463,81 @@ def test_snapshot_ndv_sketches(spark, tmp_path):
     assert est2 > est  # the chain union really merged
     with pytest.raises(ValueError, match="no NDV sketch"):
         snapshot_ndv(spark, root, "x")
+
+
+def _chain_plain(spark, root):
+    write_version(_df(spark, 0, 50).repartition(2), root, stats_cols=["k"])
+    return set(list_versions(spark, root))
+
+
+def _chain_reordered(spark, root):
+    """Set-equal appends whose deltas list the columns in another
+    order."""
+    write_version(_df(spark, 0, 50), root, stats_cols=["k"])
+    append_version(_df(spark, 50, 60).select("x", "k"), root, stats_cols=["k"])
+    append_version(_df(spark, 60, 70), root)
+    return set(list_versions(spark, root))
+
+
+def _chain_evolved(spark, root):
+    """Additive evolution, the second time with the new column first."""
+    write_version(_df(spark, 0, 50), root, stats_cols=["k"])
+    append_version(
+        _df(spark, 50, 60).withColumn("tag", F.lit("a")), root, allow_evolution=True
+    )
+    append_version(
+        _df(spark, 60, 70).select(
+            F.lit(1).alias("n"), "k", F.lit("b").alias("tag"), "x"
+        ),
+        root,
+        allow_evolution=True,
+    )
+    return set(list_versions(spark, root))
+
+
+def _chain_digit_boundary(spark, root):
+    """A chain across v=9 -> v=10, where mergeSchema's path order puts
+    v=10/ first: a reordered delta there cannot reuse its base's
+    column order, so those versions record nothing and infer."""
+    write_version(_df(spark, 0, 1), root)  # manifest-less v=0 ...
+    for v in range(1, 9):  # ... and copies of it up to v=8
+        shutil.copytree(f"{root}/v=0", f"{root}/v={v}")
+    write_version(_df(spark, 0, 20), root, stats_cols=["k"])  # v=9
+    append_version(_df(spark, 20, 25).select("x", "k"), root)  # v=10
+    append_version(_df(spark, 25, 30), root)  # v=11
+    return {9}
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_chain_plain, _chain_reordered, _chain_evolved, _chain_digit_boundary],
+    ids=lambda f: f.__name__[len("_chain_"):],
+)
+def test_recorded_chain_schema_matches_inference(spark, tmp_path, build):
+    """Every manifest-bearing version's recorded ``schema`` is exactly
+    what mergeSchema infers over its chain dirs — field order and
+    nullability included — and every read binds that same schema.
+    (MERGE / DELETE / UPDATE chains: tests/test_metadata_costs.py.)"""
+    from pyspark.sql.types import StructType
+
+    from pyspark_big_data_spark.operators.versioned import (
+        invalidate_metadata_cache,
+        manifest,
+    )
+
+    root = str(tmp_path / "vds")
+    want_recorded = build(spark, root)
+    invalidate_metadata_cache(root)
+    recorded = set()
+    for v in list_versions(spark, root):
+        m = manifest(spark, root, v)
+        if m is None:
+            continue
+        dirs = [f"{root}/v={c}" for c in version_chain(spark, root, v)]
+        inferred = spark.read.option("mergeSchema", "true").parquet(*dirs).schema
+        if "schema" in m:
+            recorded.add(v)
+            assert StructType.fromJson(m["schema"]) == inferred, v
+        assert read_version(spark, root, v).schema == inferred, v
+    assert recorded == want_recorded
+

@@ -232,9 +232,18 @@ def test_full_rewrite_in_range_refuses(spark, tmp_path):
 
 def test_schema_evolution_null_fills_preimages(spark, tmp_path):
     """Preimages read from pre-evolution ancestor files null-fill the
-    late column, exactly like chain reads."""
+    late column, exactly like chain reads; every version's recorded
+    chain schema equals mergeSchema inference over its chain dirs."""
+    from pyspark.sql.types import StructType
+
+    from pyspark_big_data_spark.operators.versioned import (
+        list_versions,
+        manifest,
+        version_chain,
+    )
+
     root = str(tmp_path / "t")
-    write_version(_base(spark), root)
+    write_version(_base(spark), root, stats_cols=["k"])
     append_version(
         _base(spark).filter("k < 1").withColumn("extra", F.lit("e")),
         root,
@@ -245,6 +254,33 @@ def test_schema_evolution_null_fills_preimages(spark, tmp_path):
     dels = ch.filter(F.col(CHANGE_TYPE_COL) == "delete").collect()
     assert len(dels) == 1 and dels[0]["extra"] is None
     _assert_fold_equals_head(spark, root, 0, v2)
+    for v in list_versions(spark, root):
+        dirs = [f"{root}/v={c}" for c in version_chain(spark, root, v)]
+        inferred = spark.read.option("mergeSchema", "true").parquet(*dirs).schema
+        assert StructType.fromJson(manifest(spark, root, v)["schema"]) == inferred, v
+
+
+@pytest.mark.parametrize("mutation", ["delete", "update"])
+def test_row_mutations_keep_stats_pruning(spark, tmp_path, mutation):
+    """delete_where / update_where carry the head's stats_cols into
+    their commit: pruned reads keep working on every later head (and
+    equal the unpruned read plus the filter), and the delete-folding
+    rewrite still writes a stats manifest."""
+    from pyspark_big_data_spark.operators.deletes import materialize_deletes
+    from pyspark_big_data_spark.operators.versioned import manifest
+
+    root = str(tmp_path / "t")
+    write_version(_base(spark, 40).repartitionByRange(4, "k"), root, stats_cols=["k"])
+    if mutation == "delete":
+        v = delete_where(spark, root, "k < 5")["version"]
+    else:
+        v = update_where(spark, root, {"val": "val + 1"}, "k < 5")["version"]
+    assert manifest(spark, root, v)["stats_cols"] == ["k"]
+    want = read_version_mor(spark, root).filter("k BETWEEN 3 AND 12")
+    got = read_version_mor(spark, root, pruned_col="k", lower=3, upper=12)
+    assert sorted(got.collect()) == sorted(want.collect())
+    folded = materialize_deletes(spark, root)
+    assert manifest(spark, root, folded)["stats_cols"] == ["k"]
 
 
 def test_delete_where_noop_and_update_where_noop(spark, tmp_path):
