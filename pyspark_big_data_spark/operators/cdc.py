@@ -90,10 +90,10 @@ def apply_changes(
 
     The winning event per key is applied: 'u' replaces-or-inserts the
     payload row, 'd' removes the key (deleting an absent key is a
-    no-op, as in every CDC sink). Commits via the same stage-then-
-    atomic-rename swap as upsert_parquet. Returns
+    no-op, as in every CDC sink). Stages the new snapshot and commits
+    it with ``fs.swap_dir``, like upsert_parquet. Returns
     {"upserted": n, "deleted": n, "total": n}."""
-    from pyspark_big_data_spark.operators.upsert import _fs
+    from pyspark_big_data_spark import fs
 
     winners = resolve_changes(changes, key, seq_col, op_col).localCheckpoint(
         eager=True
@@ -113,17 +113,8 @@ def apply_changes(
     merged = survivors.unionByName(upserts)
 
     tmp = path.rstrip("/") + ".cdc_tmp"
-    old = path.rstrip("/") + ".cdc_old"
     merged.write.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"cdc swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        fs.rename(Path(old), hpath)  # roll back: dataset stays readable
-        raise RuntimeError(f"cdc swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
+    fs.swap_dir(spark, tmp, path, "cdc")
     spark.catalog.refreshByPath(path)
 
     n_upserted = upserts.count()

@@ -68,8 +68,8 @@ from pyspark_big_data_spark.operators.deletes import (
     list_delete_commits,
     list_pos_delete_commits,
 )
+from pyspark_big_data_spark.fs import _driver_readable
 from pyspark_big_data_spark.operators.versioned import (
-    _driver_readable,
     chain_schema,
     list_versions,
     manifest,

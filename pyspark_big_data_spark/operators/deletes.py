@@ -58,26 +58,25 @@ Reference parity note: the reference engine
 (/root/reference/src/query1-4.py) is read-only; deletes are extension
 surface for production pipelines (GDPR erasure against a pinned
 snapshot without a full rewrite is the motivating case — the eager
-full-rewrite variant is operators/upsert.py::erase_keys_parquet).
+full-rewrite variant is operators/upsert.py::erase_keys_parquet, which
+rewrites the dataset and swaps it in with ``fs.swap_dir``).
 """
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from pyspark_big_data_spark import fs
+from pyspark_big_data_spark.fs import list_numbered_dirs
 from pyspark_big_data_spark.operators.versioned import (
     EMBEDDED_DELETES_DIR,
-    _fs,
     _read_selected_aligned,
     _resolve_version,
     chain_schema,
-    commit_staged,
     index_cols,
-    list_numbered_dirs,
     list_versions,
     manifest,
     read_version,
@@ -119,31 +118,22 @@ def list_delete_commits(
     return list_numbered_dirs(spark, _deletes_root(root, version), "d=")
 
 
-def _write_rows_sidecar(spark, fs, jvm, staging: str) -> None:
+def _write_rows_sidecar(spark: SparkSession, staging: str) -> None:
     """Stamp ``_rows.json`` (tombstone row count, from the staged
     parquet footers — Spark's count(*) over parquet is metadata-only)
     into the staging dir so the read path can price the anti-join
     without running a job. Underscore-prefixed: invisible to scans."""
     spark.catalog.refreshByPath(staging)
     n = spark.read.parquet(staging).count()
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(f"{staging}/_rows.json"), True)
-    try:
-        out.write(bytearray(json.dumps({"rows": int(n)}).encode("utf-8")))
-    finally:
-        out.close()
+    fs.write_json(spark, f"{staging}/_rows.json", {"rows": int(n)})
 
 
 def _commit_rows(spark: SparkSession, commit_dir: str) -> int:
     """Row count of one tombstone commit: the ``_rows.json`` sidecar
     when present, else a footer-only count (pre-r11 commits)."""
-    fs, _, jvm = _fs(spark, commit_dir)
-    side = jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/_rows.json")
-    if fs.exists(side):
-        stream = fs.open(side)
-        try:
-            return int(json.loads(bytes(stream.readAllBytes()))["rows"])
-        finally:
-            stream.close()
+    side = f"{commit_dir}/_rows.json"
+    if fs.exists(spark, side):
+        return int(fs.read_json(spark, side)["rows"])
     spark.catalog.refreshByPath(commit_dir)
     return spark.read.parquet(commit_dir).count()
 
@@ -189,9 +179,7 @@ def delete_keys(
     tomb = keys.select(F.col(key)).filter(F.col(key).isNotNull()).distinct()
 
     droot = _deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hroot)
+    fs.mkdirs(spark, droot)
     while True:
         commits = list_delete_commits(spark, root, version)
         k = (commits[-1] + 1) if commits else 0
@@ -199,8 +187,8 @@ def delete_keys(
         # delete committers must never sweep each other's bytes
         staging = f"{droot}/.staging_d{k}.{uuid.uuid4().hex[:12]}"
         tomb.write.mode("overwrite").parquet(staging)
-        _write_rows_sidecar(spark, fs, jvm, staging)
-        if commit_staged(fs, jvm, droot, staging, k, prefix="d="):
+        _write_rows_sidecar(spark, staging)
+        if fs.commit_staged(spark, droot, staging, k, prefix="d="):
             return k
         # lost the race: another deleter took d=K; retry at K+1
 
@@ -317,8 +305,7 @@ def _embedded_deletes_dir(
     m = manifest(spark, root, version)
     if m is not None:
         return d if "pos_delete_rows" in m else None
-    fs, hp, _ = _fs(spark, d)
-    return d if fs.exists(hp) else None
+    return d if fs.exists(spark, d) else None
 
 
 def list_pos_delete_commits(
@@ -405,9 +392,7 @@ def delete_positions(
         raise ValueError("positional delete contains null addresses")
 
     droot = _pos_deletes_root(root, version)
-    fs, hroot, jvm = _fs(spark, droot)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hroot)
+    fs.mkdirs(spark, droot)
     while True:
         commits = list_pos_delete_commits(spark, root, version)
         k = (commits[-1] + 1) if commits else 0
@@ -415,14 +400,9 @@ def delete_positions(
         # delete committers must never sweep each other's bytes
         staging = f"{droot}/.staging_d{k}.{uuid.uuid4().hex[:12]}"
         tomb.write.mode("overwrite").parquet(staging)
-        _write_rows_sidecar(spark, fs, jvm, staging)
-        if commit_staged(fs, jvm, droot, staging, k, prefix="d="):
+        _write_rows_sidecar(spark, staging)
+        if fs.commit_staged(spark, droot, staging, k, prefix="d="):
             return k
-
-
-def _has_rows_sidecar(spark: SparkSession, commit_dir: str) -> bool:
-    fs, _, jvm = _fs(spark, commit_dir)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{commit_dir}/_rows.json"))
 
 
 def _chain_vectors(spark: SparkSession, root: str, version: int):
@@ -461,7 +441,7 @@ def _chain_vectors(spark: SparkSession, root: str, version: int):
         proot = _pos_deletes_root(root, v)
         for k in list_pos_delete_commits(spark, root, v) if v in pos_vs else []:
             p = f"{proot}/d={k}"
-            if _has_rows_sidecar(spark, p):
+            if fs.exists(spark, f"{p}/_rows.json"):
                 pos_paths.append(p)
             else:  # pre-r11 commit: bare-basename addresses
                 legacy_pos_paths.append(p)

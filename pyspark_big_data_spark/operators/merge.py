@@ -74,7 +74,6 @@ from pyspark_big_data_spark.operators.versioned import (
     _resolve_version,
     append_version,
     chain_schema,
-    index_cols,
 )
 
 
@@ -111,7 +110,9 @@ def merge_into(
 ) -> dict:
     """Run the MERGE and return ``{"version", "n_deleted", "n_updated",
     "n_inserted"}`` (the new version is None when every clause matched
-    nothing — an empty MERGE burns no version number).
+    nothing — an empty MERGE burns no version number). With
+    ``stats_cols`` left None the commit carries the head manifest's
+    ``stats_cols`` / ``bloom_cols``, like every row mutation.
 
     COLUMN-LEVEL clauses (r13). By default the clauses are full-width
     (``UPDATE SET * / INSERT *``: the source must carry every target
@@ -716,12 +717,9 @@ def delete_where(
             return {"version": None, "n_deleted": 0}
         vector = hit.select(FILE_COL, POS_COL)
         empty = spark.createDataFrame([], chain_schema(spark, root, version))
-        stats_cols, bloom_cols = index_cols(spark, root, version)
         new_v = append_version(
             empty,
             root,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
             allow_base_tombstones=True,
             expected_base=None if base_version is not None else version,
             base_override=version if base_version is not None else None,
@@ -784,12 +782,9 @@ def update_where(
                 for c in target_cols
             ]
         )
-        stats_cols, bloom_cols = index_cols(spark, root, version)
         new_v = append_version(
             updated,
             root,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
             allow_base_tombstones=True,
             expected_base=None if base_version is not None else version,
             base_override=version if base_version is not None else None,

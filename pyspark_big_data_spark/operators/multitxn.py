@@ -51,17 +51,16 @@ read-only; this extends the mutation surface (VERDICT r11 next-step
 
 from __future__ import annotations
 
-import json
 import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyspark_big_data_spark import fs
+from pyspark_big_data_spark.fs import list_numbered_dirs
 from pyspark_big_data_spark.operators.versioned import (
-    _fs,
-    _read_json,
-    commit_staged,
-    list_numbered_dirs,
+    _delete_version_dirs,
+    invalidate_metadata_cache,
     read_version,
     write_version,
 )
@@ -108,9 +107,7 @@ def txn_manifest(
             raise ValueError(f"transaction group at {group_root} has no commits")
     elif txn not in list_txns(spark, group_root):
         raise ValueError(f"transaction t={txn} does not exist under {group_root}")
-    p = f"{_txn_root(group_root)}/t={txn}/manifest.json"
-    fs, _, jvm = _fs(spark, p)
-    return _read_json(fs, jvm, p)
+    return fs.read_json(spark, f"{_txn_root(group_root)}/t={txn}/manifest.json")
 
 
 def read_txn_table(
@@ -203,10 +200,8 @@ def commit_txn(
             _base_override=base_map[table] if append else None,
         )
 
-    fs, _, jvm = _fs(spark, group_root)
-    Path = jvm.org.apache.hadoop.fs.Path
     troot = _txn_root(group_root)
-    fs.mkdirs(Path(troot))
+    fs.mkdirs(spark, troot)
     my_tables = set(writes)
     k_planned = (current + 1) if current is not None else 0
     while True:
@@ -248,14 +243,9 @@ def commit_txn(
             "writer": uuid.uuid4().hex,
         }
         staging = f"{troot}/.staging_t{k}.{doc['writer'][:12]}"
-        fs.delete(Path(staging), True)
-        fs.mkdirs(Path(staging))
-        out = fs.create(Path(f"{staging}/manifest.json"), True)
-        try:
-            out.write(bytearray(json.dumps(doc).encode("utf-8")))
-        finally:
-            out.close()
-        if commit_staged(fs, jvm, troot, staging, k, prefix="t="):
+        fs.delete(spark, staging)
+        fs.write_json(spark, f"{staging}/manifest.json", doc)
+        if fs.commit_staged(spark, troot, staging, k, prefix="t="):
             return k
         # lost the rename: loop re-reads the winner and re-arbitrates
         current = latest_txn(spark, group_root)
@@ -320,10 +310,8 @@ def expire_group(
             pins.setdefault(table, set()).add(int(v))
             tables.add(table)
 
-    fs, _, jvm = _fs(spark, group_root)
-    Path = jvm.org.apache.hadoop.fs.Path
     for t in drop:
-        fs.delete(Path(f"{_txn_root(group_root)}/t={t}"), True)
+        fs.delete(spark, f"{_txn_root(group_root)}/t={t}")
 
     expired: dict[str, list[int]] = {}
     for table in sorted(tables):
@@ -339,26 +327,17 @@ def expire_group(
             # not on the debris.
             import time
 
-            now_ms = time.time() * 1000.0
+            now = time.time()
             top = max(table_pins)
             for v in list_versions(spark, troot):
                 if v <= top:
                     continue
                 if not reclaim_unreferenced:
-                    vdir = Path(f"{troot}/v={v}")
-                    age_s = (
-                        now_ms - fs.getFileStatus(vdir).getModificationTime()
-                    ) / 1000.0
+                    age_s = now - fs.mtime(spark, f"{troot}/v={v}")
                     if age_s < reclaim_older_than:
                         continue  # fresh: could be a live writer's phase 1
-                fs.delete(Path(f"{troot}/v={v}"), True)
-                fs.delete(Path(f"{troot}/_deletes/v={v}"), True)
-                fs.delete(Path(f"{troot}/_pos_deletes/v={v}"), True)
+                _delete_version_dirs(spark, troot, v)
                 expired.setdefault(table, []).append(v)
-                from pyspark_big_data_spark.operators.versioned import (
-                    invalidate_metadata_cache,
-                )
-
                 invalidate_metadata_cache(troot)
         expired.setdefault(table, [])
         expired[table] = sorted(

@@ -27,17 +27,13 @@ few hundred bytes regardless of snapshot size.
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark_big_data_spark.operators.versioned import (
-    _fs,
-    _read_json,
-    list_versions,
-    read_version,
-)
+from pyspark_big_data_spark import fs
+from pyspark_big_data_spark.fs import _list_dir, list_numbered_dirs, read_json
+from pyspark_big_data_spark.operators.versioned import list_versions, read_version
 
 _REFS_DIR = "_refs"
 _NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,99}$")
@@ -63,11 +59,9 @@ def create_tag(
     if version not in list_versions(spark, root):
         raise ValueError(f"cannot tag uncommitted version v={version} at {root}")
     target = _tag_path(root, name)
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if fs.exists(Path(target)):
+    if fs.exists(spark, target):
         raise ValueError(f"tag {name!r} already exists at {root}")
-    fs.mkdirs(Path(_refs_root(root)))
+    fs.mkdirs(spark, _refs_root(root))
     import uuid
 
     nonce = uuid.uuid4().hex
@@ -78,24 +72,18 @@ def create_tag(
     # writer's doc under the other's success — uniqueness confines the
     # race to the rename
     staging = f"{_refs_root(root)}/.staging_{name}.{nonce[:12]}.json"
-    out = fs.create(Path(staging), True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
-    # file-onto-file rename: on HDFS/object stores this fails (returns
-    # false) if the target appeared — first writer wins. On
-    # RawLocalFileSystem, rename delegates to POSIX rename(2), which
-    # SILENTLY OVERWRITES an existing file (r9 advice item) — so the
-    # rename's return value alone can't arbitrate the race there.
-    # Read-back verification closes it: each writer stamps a unique
-    # nonce into its doc and only claims success if the published tag
-    # still carries ITS nonce after the rename. A loser whose pin was
-    # overwritten sees the winner's nonce and raises.
-    if not fs.rename(Path(staging), Path(target)):
-        fs.delete(Path(staging), False)
+    fs.write_json(spark, staging, doc)
+    # file-onto-file rename: first writer wins on HDFS, but POSIX
+    # rename(2) silently overwrites (fs.py), so the rename's verdict
+    # alone can't arbitrate the race. Read-back verification closes
+    # it: each writer stamps a unique nonce into its doc and only
+    # claims success if the published tag still carries ITS nonce
+    # after the rename. A loser whose pin was overwritten sees the
+    # winner's nonce and raises.
+    if not fs.rename(spark, staging, target):
+        fs.delete(spark, staging)
         raise ValueError(f"tag {name!r} was created concurrently at {root}")
-    published = _read_json(fs, jvm, target)
+    published = read_json(spark, target)
     if published.get("writer") != nonce:
         raise ValueError(f"tag {name!r} was created concurrently at {root}")
     return doc
@@ -104,35 +92,26 @@ def create_tag(
 def read_tag(spark: SparkSession, root: str, name: str) -> int:
     """Resolve a tag to its pinned version; raises if absent."""
     target = _tag_path(root, name)
-    fs, _, jvm = _fs(spark, root)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(target)):
+    if not fs.exists(spark, target):
         raise FileNotFoundError(f"no tag {name!r} at {root}")
-    return int(_read_json(fs, jvm, target)["version"])
+    return int(read_json(spark, target)["version"])
 
 
 def list_tags(spark: SparkSession, root: str) -> dict[str, int]:
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    refs = Path(_refs_root(root))
-    if not fs.exists(refs):
-        return {}
     out: dict[str, int] = {}
-    for status in fs.listStatus(refs):
-        fname = status.getPath().getName()
-        if not status.isFile() or not fname.endswith(".json") or fname.startswith("."):
+    for fname, is_dir in _list_dir(spark, _refs_root(root))[1]:
+        if is_dir or not fname.endswith(".json") or fname.startswith("."):
             continue
-        doc = _read_json(fs, jvm, str(status.getPath().toUri().getPath()))
+        doc = read_json(spark, f"{_refs_root(root)}/{fname}")
         out[fname[: -len(".json")]] = int(doc["version"])
     return out
 
 
 def delete_tag(spark: SparkSession, root: str, name: str) -> None:
     target = _tag_path(root, name)
-    fs, _, jvm = _fs(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path(target)
-    if not fs.exists(hp):
+    if not fs.exists(spark, target):
         raise FileNotFoundError(f"no tag {name!r} at {root}")
-    fs.delete(hp, False)
+    fs.delete(spark, target)
 
 
 def read_by_tag(spark: SparkSession, root: str, name: str) -> DataFrame:
@@ -172,8 +151,6 @@ def read_by_tag(spark: SparkSession, root: str, name: str) -> DataFrame:
 
 _BRANCHES_DIR = "branches"
 
-_S_RE = re.compile(r"^s=(\d+)$")
-
 
 class BranchConflict(RuntimeError):
     """An optimistic branch update lost its race: the head moved after
@@ -186,31 +163,16 @@ def _branch_dir(root: str, name: str) -> str:
     return f"{_refs_root(root)}/{_BRANCHES_DIR}/{name}"
 
 
-def _branch_seqs(fs, jvm, bdir: str) -> list[int]:
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(bdir)):
-        return []
-    out = []
-    for status in fs.listStatus(Path(bdir)):
-        if not status.isDirectory():
-            continue
-        m = _S_RE.match(status.getPath().getName())
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 def _branch_state(
     spark: SparkSession, root: str, name: str
 ) -> tuple[int, dict]:
     """``(seq, doc)`` of the branch's newest committed log entry."""
     bdir = _branch_dir(root, name)
-    fs, _, jvm = _fs(spark, root)
-    seqs = _branch_seqs(fs, jvm, bdir)
+    seqs = list_numbered_dirs(spark, bdir, "s=")
     if not seqs:
         raise FileNotFoundError(f"no branch {name!r} at {root}")
     seq = seqs[-1]
-    return seq, _read_json(fs, jvm, f"{bdir}/s={seq}/doc.json")
+    return seq, read_json(spark, f"{bdir}/s={seq}/doc.json")
 
 
 def _commit_branch_entry(
@@ -218,21 +180,13 @@ def _commit_branch_entry(
 ) -> bool:
     """Publish ``doc`` as log entry ``s=seq`` via the verified rename;
     False when another writer owns that sequence slot (the CAS loss)."""
-    from pyspark_big_data_spark.operators.versioned import commit_staged
-
     bdir = _branch_dir(root, name)
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(Path(bdir))
+    fs.mkdirs(spark, bdir)
     # writer-unique staging: racers must never share staged bytes
     staging = f"{bdir}/.staging_{doc['writer'][:16]}"
-    fs.delete(Path(staging), True)
-    out = fs.create(Path(f"{staging}/doc.json"), True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
-    return commit_staged(fs, jvm, bdir, staging, seq, prefix="s=")
+    fs.delete(spark, staging)
+    fs.write_json(spark, f"{staging}/doc.json", doc)
+    return fs.commit_staged(spark, bdir, staging, seq, prefix="s=")
 
 
 def create_branch(
@@ -248,8 +202,7 @@ def create_branch(
         raise ValueError(
             f"cannot branch from uncommitted version v={version} at {root}"
         )
-    fs, _, jvm = _fs(spark, root)
-    if _branch_seqs(fs, jvm, _branch_dir(root, name)):
+    if list_numbered_dirs(spark, _branch_dir(root, name), "s="):
         raise ValueError(f"branch {name!r} already exists at {root}")
     doc = {"version": int(version), "seq": 0, "writer": uuid.uuid4().hex}
     if not _commit_branch_entry(spark, root, name, 0, doc):
@@ -262,23 +215,15 @@ def branch_head(spark: SparkSession, root: str, name: str) -> int:
 
 
 def list_branches(spark: SparkSession, root: str) -> dict[str, int]:
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    broot = Path(f"{_refs_root(root)}/{_BRANCHES_DIR}")
-    if not fs.exists(broot):
-        return {}
+    broot = f"{_refs_root(root)}/{_BRANCHES_DIR}"
     out: dict[str, int] = {}
-    for status in fs.listStatus(broot):
-        name = status.getPath().getName()
-        if not status.isDirectory() or name.startswith("."):
+    for name, is_dir in _list_dir(spark, broot)[1]:
+        if not is_dir or name.startswith("."):
             continue
-        seqs = _branch_seqs(fs, jvm, str(status.getPath().toUri().getPath()))
+        seqs = list_numbered_dirs(spark, f"{broot}/{name}", "s=")
         if not seqs:
             continue  # an empty dir is an uncommitted create: invisible
-        doc = _read_json(
-            fs, jvm,
-            f"{_refs_root(root)}/{_BRANCHES_DIR}/{name}/s={seqs[-1]}/doc.json",
-        )
+        doc = read_json(spark, f"{broot}/{name}/s={seqs[-1]}/doc.json")
         out[name] = int(doc["version"])
     return out
 
@@ -326,11 +271,9 @@ def update_branch(
 
 def delete_branch(spark: SparkSession, root: str, name: str) -> None:
     bdir = _branch_dir(root, name)
-    fs, _, jvm = _fs(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path(bdir)
-    if not fs.exists(hp):
+    if not fs.exists(spark, bdir):
         raise FileNotFoundError(f"no branch {name!r} at {root}")
-    fs.delete(hp, True)
+    fs.delete(spark, bdir)
 
 
 def prune_branch_log(
@@ -351,19 +294,15 @@ def prune_branch_log(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     bdir = _branch_dir(root, name)
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    seqs = _branch_seqs(fs, jvm, bdir)
+    seqs = list_numbered_dirs(spark, bdir, "s=")
     if not seqs:
         raise FileNotFoundError(f"no branch {name!r} at {root}")
     pruned = seqs[:-keep_last] if len(seqs) > keep_last else []
     for s in pruned:
-        fs.delete(Path(f"{bdir}/s={s}"), True)
-    if fs.exists(Path(bdir)):
-        for status in fs.listStatus(Path(bdir)):
-            n = status.getPath().getName()
-            if status.isDirectory() and n.startswith(".staging_"):
-                fs.delete(status.getPath(), True)
+        fs.delete(spark, f"{bdir}/s={s}")
+    for n, is_dir in _list_dir(spark, bdir)[1]:
+        if is_dir and n.startswith(".staging_"):
+            fs.delete(spark, f"{bdir}/{n}")
     return pruned
 
 

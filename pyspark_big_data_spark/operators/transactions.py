@@ -32,7 +32,7 @@ snapshots:
   commutative rule the table formats implement at partition/file
   granularity.
 - The physical rename race is handled below the conflict check by the
-  shared ``commit_staged`` seam: a writer that loses the rename deletes
+  shared ``fs.commit_staged`` seam: a writer that loses the rename deletes
   its bytes and loops, re-running conflict detection against whatever
   just landed.
 
@@ -53,17 +53,12 @@ time travel.
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark_big_data_spark.operators.versioned import (
-    _fs,
-    commit_staged,
-    latest_version,
-    read_version,
-)
+from pyspark_big_data_spark import fs
+from pyspark_big_data_spark.operators.versioned import latest_version, read_version
 
 TXN_NAME = "_txn.json"
 
@@ -79,15 +74,7 @@ def txn_info(spark: SparkSession, root: str, version: int) -> dict | None:
     snapshot was committed outside the transaction layer — e.g. a plain
     ``write_version`` — and therefore has an UNKNOWN write set)."""
     tpath = f"{root.rstrip('/')}/v={version}/{TXN_NAME}"
-    fs, hp, _ = _fs(spark, tpath)
-    if not fs.exists(hp):
-        return None
-    stream = fs.open(hp)
-    try:
-        data = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    return fs.read_json(spark, tpath) if fs.exists(spark, tpath) else None
 
 
 def _canon(values) -> list[str]:
@@ -132,8 +119,6 @@ def commit_replace_where(
     if not vals:
         raise ValueError("transaction must declare a non-empty domain")
     vals_s = _canon(vals)
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
     for _ in range(max_retries):
         latest = latest_version(spark, root)
         if latest is None:
@@ -178,12 +163,8 @@ def commit_replace_where(
             "col": col,
             "values": vals_s,
         }
-        out = fs.create(Path(f"{staging}/{TXN_NAME}"), True)
-        try:
-            out.write(bytearray(json.dumps(doc).encode("utf-8")))
-        finally:
-            out.close()
-        if commit_staged(fs, jvm, root, staging, n):
+        fs.write_json(spark, f"{staging}/{TXN_NAME}", doc)
+        if fs.commit_staged(spark, root, staging, n):
             return n
         # Rename race lost: loop re-runs conflict detection against the
         # version that just landed before trying again.

@@ -2,9 +2,8 @@
 
 Plain parquet has no transactional MERGE; the operational pattern is
 read -> anti-join out the updated keys -> union the new rows ->
-rewrite -> atomic rename swap (the same crash-safe swap as
-tools/compact_index.py, so a failed rewrite can never leave a
-half-written dataset). This is the CDC-apply shape for mutable
+rewrite -> ``fs.swap_dir`` (move aside, move in, roll back on
+failure), so a failed rewrite can never leave a half-written dataset. This is the CDC-apply shape for mutable
 dimensions (customer records, document metadata) next to the engine's
 append-only corpora; at 100 TB you run it per partition (pass
 ``partition_by`` so only touched hive partitions rewrite their files
@@ -24,11 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+from pyspark_big_data_spark import fs
 
 
 def upsert_parquet(
@@ -63,20 +58,11 @@ def upsert_parquet(
     merged = survivors.unionByName(updates)
 
     tmp = path.rstrip("/") + ".upsert_tmp"
-    old = path.rstrip("/") + ".upsert_old"
     writer = merged.write
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"upsert swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        fs.rename(Path(old), hpath)  # roll back: dataset stays usable
-        raise RuntimeError(f"upsert swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
+    fs.swap_dir(spark, tmp, path, "upsert")
 
     return {
         "updated": n_before - n_survivors,
@@ -118,19 +104,10 @@ def erase_keys_parquet(
     n_kept = survivors.count()
 
     tmp = path.rstrip("/") + ".erase_tmp"
-    old = path.rstrip("/") + ".erase_old"
     writer = survivors.write
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"erase swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        fs.rename(Path(old), hpath)  # roll back: dataset stays usable
-        raise RuntimeError(f"erase swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
+    fs.swap_dir(spark, tmp, path, "erase")
 
     return {"erased": n_before - n_kept, "kept": n_kept}

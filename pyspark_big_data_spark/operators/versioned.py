@@ -7,10 +7,10 @@ A versioned dataset is a directory of immutable full snapshots::
     root/v=2/ ...
 
 ``write_version`` stages the new snapshot in a temp dir and RENAMES it
-into ``v=N`` (N = latest + 1) — the same crash-safe single-rename seam
-as operators/upsert.py, so readers never observe a half-written
-version: an interrupted write leaves only a stale temp dir that the
-next writer sweeps. ``read_version`` pins any historical version;
+into ``v=N`` (N = latest + 1) through ``fs.commit_staged``, the
+verified-rename commit every log here shares, so readers never observe
+a half-written version: an interrupted write leaves only a stale temp
+dir that the next writer sweeps. ``read_version`` pins any historical version;
 ``latest_version`` resolves the newest COMMITTED one (rename is the
 commit — a directory only counts once it sits at ``v=N``).
 
@@ -55,112 +55,20 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
-
-# The Hadoop ``Path`` class and one ``FileSystem`` handle per
-# (scheme, authority), for the session whose JVM context is ``jsc``.
-# Resolving ``jvm.org.apache.hadoop.fs.Path`` costs one py4j round trip
-# per name segment, and ``getFileSystem`` another two, on every call;
-# Hadoop caches the FileSystem itself, so holding it here changes no
-# semantics. A new SparkContext (a different ``jsc``) starts afresh.
-_HADOOP: dict = {}
-
-
-def _fs(spark: SparkSession, path: str):
-    jsc = spark._jsc
-    if _HADOOP.get("jsc") is not jsc:
-        _HADOOP.clear()
-        _HADOOP.update(
-            jsc=jsc, Path=spark._jvm.org.apache.hadoop.fs.Path, fs={}
-        )
-    hpath = _HADOOP["Path"](path)
-    key = urlparse(str(path))[:2]
-    fs = _HADOOP["fs"].get(key)
-    if fs is None:
-        fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-        _HADOOP["fs"][key] = fs
-    return fs, hpath, spark._jvm
-
-
-def _driver_readable(path: str) -> bool:
-    """True when ``path`` is POSIX-readable from the driver process
-    (no scheme, or an explicit file:), so pyarrow and ``os`` fast paths
-    may read it directly. Remote filesystems (hdfs://, s3a://, ...)
-    fall back to the Hadoop/Spark paths that work on any Hadoop
-    filesystem — the r13 driver-side footer/vector reads silently
-    assumed a local root (r13 advice item)."""
-    return urlparse(str(path)).scheme in ("", "file")
-
-
-def _local_path(path: str) -> str:
-    """The POSIX path of a driver-readable ``path`` (``file:`` URIs
-    lose their scheme)."""
-    parsed = urlparse(str(path))
-    return parsed.path if parsed.scheme == "file" else str(path)
-
-
-def _list_dir_local(directory: str) -> tuple[str, list[tuple[str, bool]]]:
-    """``_list_dir`` for a driver-readable directory: one
-    ``os.scandir``, zero py4j calls. Hides checksum files
-    (``.<name>.crc``) as Hadoop's local filesystem does."""
-    local = os.path.abspath(_local_path(directory))
-    try:
-        with os.scandir(local) as it:
-            return local, [
-                (e.name, e.is_dir())
-                for e in it
-                if not (e.name.startswith(".") and e.name.endswith(".crc"))
-            ]
-    except (FileNotFoundError, NotADirectoryError):
-        return local, []
-
-
-def _list_dir_hadoop(
-    spark: SparkSession, directory: str
-) -> tuple[str, list[tuple[str, bool]]]:
-    """``_list_dir`` through the Hadoop FileSystem (any scheme)."""
-    fs, hdir, _ = _fs(spark, directory)
-    base = str(fs.makeQualified(hdir).toUri().getPath()).rstrip("/")
-    if not fs.exists(hdir):
-        return base, []
-    return base, [
-        (st.getPath().getName(), bool(st.isDirectory()))
-        for st in fs.listStatus(hdir)
-    ]
-
-
-def _list_dir(spark: SparkSession, directory: str) -> tuple[str, list[tuple[str, bool]]]:
-    """``(dir_path, [(name, is_dir), ...])``: the entries directly under
-    ``directory``, with ``dir_path`` its absolute scheme-less path; no
-    entries when it does not exist. The one listing behind every
-    commit log and file census here. Local roots (the
-    ``_driver_readable`` rule) list with ``os.scandir``; other schemes
-    keep the Hadoop listing, which pays three py4j calls per entry."""
-    if _driver_readable(directory):
-        return _list_dir_local(directory)
-    return _list_dir_hadoop(spark, directory)
-
-
-def list_numbered_dirs(spark: SparkSession, root: str, prefix: str) -> list[int]:
-    """Committed ``<prefix>N`` directory numbers under ``root``,
-    ascending — the one listing every commit-by-rename log uses
-    (versions ``v=``, delete commits ``d=``, vector dirs per version,
-    branch entries ``s=``, transaction manifests ``t=``). Staging/temp
-    dirs and plain files never match."""
-    pat = re.compile(rf"^{re.escape(prefix)}(\d+)$")
-    _, entries = _list_dir(spark, root)
-    return sorted(
-        int(m.group(1))
-        for name, is_dir in entries
-        if is_dir and (m := pat.match(name))
-    )
+from pyspark_big_data_spark import fs
+from pyspark_big_data_spark.fs import (  # noqa: F401 (listing branches re-exported)
+    _driver_readable,
+    _list_dir,
+    _list_dir_hadoop,
+    _list_dir_local,
+    list_numbered_dirs,
+)
 
 
 def list_versions(spark: SparkSession, root: str) -> list[int]:
@@ -492,23 +400,14 @@ def _collect_file_stats(
 
 
 def _list_parquet_files(spark: SparkSession, directory: str) -> list[str]:
-    """Absolute scheme-less paths of the parquet files directly under
-    ``directory``, sorted."""
+    """Absolute paths of the parquet files directly under ``directory``,
+    sorted; scheme-qualified iff ``directory`` is (``fs._list_dir``)."""
     base, entries = _list_dir(spark, directory)
     return sorted(
         f"{base}/{name}"
         for name, is_dir in entries
         if not is_dir and name.endswith(".parquet")
     )
-
-
-def _read_json(fs, jvm, path: str) -> dict:
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
-    try:
-        data = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
 
 
 def manifest(
@@ -555,10 +454,9 @@ def manifest(
 
     vdir = f"{root.rstrip('/')}/v={version}"
     mpath = f"{vdir}/{MANIFEST_NAME}"
-    fs, hp, jvm = _fs(spark, mpath)
-    if not fs.exists(hp):
+    if not fs.exists(spark, mpath):
         return _done(None)
-    doc = _read_json(fs, jvm, mpath)
+    doc = fs.read_json(spark, mpath)
     if not doc.get("sharded"):
         return _done(doc)
     merged = {k: v for k, v in doc.items() if k not in ("sharded", "shards")}
@@ -567,7 +465,7 @@ def manifest(
     merged["file_rows"] = {}
     blooms: dict[str, dict] = {c: {} for c in doc.get("bloom_cols", [])}
     for shard_name in doc["shards"]:
-        shard = _read_json(fs, jvm, f"{vdir}/{shard_name}")
+        shard = fs.read_json(spark, f"{vdir}/{shard_name}")
         merged["files"].update(shard.get("files", {}))
         merged["file_nulls"].update(shard.get("file_nulls", {}))
         merged["file_rows"].update(shard.get("file_rows", {}))
@@ -832,9 +730,7 @@ def write_version(
                 f"columns ['_file', '_pos']; got {sorted(embedded_pos_deletes.columns)}"
             )
     spark = df.sparkSession
-    fs, hroot, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hroot)
+    fs.mkdirs(spark, root)
     while True:
         latest = latest_version(spark, root)
         n = 0 if latest is None else latest + 1
@@ -926,13 +822,6 @@ def write_version(
                 else None
             )
 
-            def _write_json(name: str, doc: dict) -> None:
-                out = fs.create(Path(f"{staging}/{name}"), True)
-                try:
-                    out.write(bytearray(json.dumps(doc).encode("utf-8")))
-                finally:
-                    out.close()
-
             fnames = sorted(stats)
             if manifest_shard_files and len(fnames) > manifest_shard_files:
                 # Manifest LIST: the root _manifest.json names per-shard
@@ -954,7 +843,7 @@ def write_version(
                             c: {f: per[f] for f in chunk if f in per}
                             for c, per in blooms.items()
                         }
-                    _write_json(sname, sdoc)
+                    fs.write_json(spark, f"{staging}/{sname}", sdoc)
                     shard_names.append(sname)
                 doc = {
                     "manifest_version": 3,
@@ -980,7 +869,7 @@ def write_version(
                     doc["pos_delete_rows"] = pos_delete_rows
                 if manifest_extra:
                     doc.update(manifest_extra)
-                _write_json(MANIFEST_NAME, doc)
+                fs.write_json(spark, f"{staging}/{MANIFEST_NAME}", doc)
             else:
                 doc = {
                     "manifest_version": 2,
@@ -1004,44 +893,20 @@ def write_version(
                     doc["pos_delete_rows"] = pos_delete_rows
                 if manifest_extra:
                     doc.update(manifest_extra)
-                _write_json(MANIFEST_NAME, doc)
+                fs.write_json(spark, f"{staging}/{MANIFEST_NAME}", doc)
         if audit is not None:
             spark.catalog.refreshByPath(staging)
             if not audit(spark.read.parquet(staging)):
-                fs.delete(Path(staging), True)
+                fs.delete(spark, staging)
                 raise AuditFailed(
                     f"audit refused snapshot targeting v={n} at {root}; "
                     "staging deleted, nothing published"
                 )
-        if commit_staged(fs, jvm, root, staging, n):
+        if fs.commit_staged(spark, root, staging, n):
             return n
         # Lost the race: someone committed v=N between our latest_version
         # read and our rename; commit_staged already removed our bytes.
         # Retry at N+1. The winner's files are untouched.
-
-
-def commit_staged(fs, jvm, root: str, staging: str, n: int, prefix: str = "v=") -> bool:
-    """Atomically publish a fully-staged snapshot dir as ``<prefix>N``
-    (``v=N`` by default); the shared commit seam for ``write_version``,
-    the optimistic transaction layer (operators/transactions.py), and
-    delete-vector commits (operators/deletes.py, ``prefix="d="``).
-    Returns True iff THIS writer owns the target afterwards. The
-    rename's return value alone is not a reliable verdict (see
-    ``write_version``: LocalFileSystem nests the staging dir inside an
-    existing destination and returns true), so the commit is verified
-    by the absence of a nested staging dir. On a lost race the writer's
-    bytes are deleted wherever they landed (nested under the winner's
-    target on local FS, still at ``staging`` on HDFS) — the winner's
-    files are never touched."""
-    Path = jvm.org.apache.hadoop.fs.Path
-    target = f"{root.rstrip('/')}/{prefix}{n}"
-    nested = f"{target}/{os.path.basename(staging.rstrip('/'))}"
-    renamed = fs.rename(Path(staging), Path(target))
-    if renamed and not fs.exists(Path(nested)):
-        return True
-    fs.delete(Path(nested), True)
-    fs.delete(Path(staging), True)
-    return False
 
 
 def _validate_append_base(
@@ -1158,7 +1023,10 @@ def append_version(
 
     Row counts always land in the manifest (free from the same parquet
     footers) even with no ``stats_cols``, so ``snapshot_row_count``
-    stays metadata-only across chains.
+    stays metadata-only across chains. A commit given neither
+    ``stats_cols`` nor ``bloom_cols`` carries its base's
+    (``index_cols``), so pruned reads and point lookups keep working
+    on every later head.
 
     ``allow_evolution=True`` permits ADDITIVE schema evolution: the
     delta may carry NEW columns on top of the base's (it must still
@@ -1178,11 +1046,16 @@ def append_version(
     ``embedded_pos_deletes`` stages a positional vector inside the new
     version dir itself (single-rename MERGE commits,
     operators/merge.py)."""
-    base = latest_version(df.sparkSession, root)
+    spark = df.sparkSession
+    base = latest_version(spark, root)
     if base is None:
         raise ValueError(
             f"append needs a base version under {root}; commit the "
             "initial snapshot with write_version first"
+        )
+    if stats_cols is None and bloom_cols is None:
+        stats_cols, bloom_cols = index_cols(
+            spark, root, base if base_override is None else base_override
         )
     return write_version(
         df,
@@ -1546,8 +1419,6 @@ def expire_versions(
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    fs, hroot, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
     versions = list_versions(spark, root)
     # tags AND branch heads protect their targets (and, via the chain
     # expansion below, their whole ancestries)
@@ -1565,30 +1436,32 @@ def expire_versions(
         if n not in protected
     ]
     for n in expired:
-        fs.delete(Path(f"{root.rstrip('/')}/v={n}"), True)
-        # tombstones are pinned to their version: expired data takes
-        # its deletion vectors with it (operators/deletes.py)
-        fs.delete(Path(f"{root.rstrip('/')}/_deletes/v={n}"), True)
-        fs.delete(Path(f"{root.rstrip('/')}/_pos_deletes/v={n}"), True)
+        _delete_version_dirs(spark, root, n)
     if expired:
         # deleted version dirs may have memoized manifests/schemas (and
         # a fully-drained root could even reuse the numbers)
         invalidate_metadata_cache(root)
     latest = versions[-1] if versions else -1
-    if fs.exists(hroot):
-        for status in fs.listStatus(hroot):
-            name = status.getPath().getName()
-            if not (status.isDirectory() and name.startswith(".staging_v")):
-                continue
-            try:
-                # both shapes: ".staging_v7" (pre-r13) and the
-                # writer-unique ".staging_v7.<token>"
-                n = int(name[len(".staging_v"):].split(".")[0])
-            except ValueError:
-                continue
-            if n <= latest:
-                fs.delete(status.getPath(), True)
+    for name, is_dir in _list_dir(spark, root)[1]:
+        if not (is_dir and name.startswith(".staging_v")):
+            continue
+        try:
+            # both shapes: ".staging_v7" (pre-r13) and the
+            # writer-unique ".staging_v7.<token>"
+            n = int(name[len(".staging_v"):].split(".")[0])
+        except ValueError:
+            continue
+        if n <= latest:
+            fs.delete(spark, f"{root.rstrip('/')}/{name}")
     return expired
+
+
+def _delete_version_dirs(spark: SparkSession, root: str, n: int) -> None:
+    """Delete ``v=n`` with its tombstones: deletion vectors are pinned
+    to their version, so expired data takes them along
+    (operators/deletes.py)."""
+    for sub in ("", "_deletes/", "_pos_deletes/"):
+        fs.delete(spark, f"{root.rstrip('/')}/{sub}v={n}")
 
 
 def snapshot_row_count(
@@ -1764,16 +1637,13 @@ def version_commit_times(spark: SparkSession, root: str) -> dict[int, float]:
     r11), else the ``v=N`` directory's modification time (the commit
     rename sets it — 1s granularity, the pre-r11 fallback). Metadata
     only; zero data pages."""
-    fs, _, jvm = _fs(spark, root)
-    Path = jvm.org.apache.hadoop.fs.Path
     out: dict[int, float] = {}
     for v in list_versions(spark, root):
         m = manifest(spark, root, v)
         if m is not None and m.get("committed_at") is not None:
             out[v] = float(m["committed_at"])
         else:
-            st = fs.getFileStatus(Path(f"{root.rstrip('/')}/v={v}"))
-            out[v] = st.getModificationTime() / 1000.0
+            out[v] = fs.mtime(spark, f"{root.rstrip('/')}/v={v}")
     return out
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyspark_big_data_spark import fs
 from pyspark_big_data_spark.functions import vectors as V
 from pyspark_big_data_spark.io import read_table
 from pyspark_big_data_spark.queries.registry import register
@@ -131,12 +132,6 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # projection; only new data is touched.
 
 
-def _moments_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    return hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp)
-
-
 def update_moments(batch: DataFrame, dim: int, path: str) -> tuple[np.ndarray, np.ndarray, int]:
     """Fold one batch of (vec_id, e) into the persisted moments at
     ``path`` (absent = first batch); returns the UPDATED (mean, cov, n).
@@ -171,7 +166,7 @@ def update_moments(batch: DataFrame, dim: int, path: str) -> tuple[np.ndarray, n
         else np.zeros((dim, dim))
     )
 
-    if _moments_exists(spark, path):
+    if fs.exists(spark, path):
         prev = spark.read.parquet(path).collect()[0]
         n += prev["n"]
         s = s + np.array(prev["s"])
@@ -181,12 +176,10 @@ def update_moments(batch: DataFrame, dim: int, path: str) -> tuple[np.ndarray, n
     upd = spark.createDataFrame(row, "n long, s array<double>, m2 array<double>")
     tmp = path.rstrip("/") + ".tmp"
     upd.coalesce(1).write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(Path(path), True)
-    if not fs.rename(Path(tmp), Path(path)):
-        raise RuntimeError(f"moments update failed: could not move {tmp} into place")
+    # swap, never delete-then-rename: a failed rename must leave the
+    # previous moments in place, or the next batch sees none and
+    # silently restarts the fold from zero
+    fs.swap_dir(spark, tmp, path, "moments")
 
     mean = s / n
     cov = m2 / n - np.outer(mean, mean)

@@ -275,8 +275,9 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     order keys) and customer -> events (user activity). The audit is
     the dry-run a compliance pipeline reviews before the destructive
     pass; the destructive pass itself is
-    operators/upsert.py::erase_keys_parquet per relation (crash-safe
-    rename swap, idempotent on replay), tested in tests/test_upsert.py.
+    operators/upsert.py::erase_keys_parquet per relation (a rewrite
+    committed by ``fs.swap_dir``, idempotent on replay), tested in
+    tests/test_upsert.py.
 
     Shape: each relation contributes one semi-join count + one
     anti-join count against the (broadcastable by construction) probe
@@ -348,7 +349,7 @@ def upsert_merge_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE semantics driver-verified (the lakehouse-gap witness,
     MIGRATION.md): run TWO sequential keyed upserts through
     operators/upsert.py::upsert_parquet — anti-join out updated keys,
-    union updates, rewrite, crash-safe rename swap — against a mutable
+    union updates, rewrite, ``fs.swap_dir`` — against a mutable
     customer dimension written as hive-partitioned parquet, then return
     the FINAL persisted dataset row-for-row. Merge 1 exercises both
     MERGE arms (matched-UPDATE: c_custkey % 7 == 0 gets +1000.0 /
@@ -452,7 +453,7 @@ def snapshot_time_travel_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     version chain as layered CTEs, so a mutated historical snapshot, a
     version that read as empty, a staging dir counted as committed, or
     a lost delete/insert flips the row red. Each write commits via
-    stage-then-rename (the crash-safe seam shared with upsert_parquet);
+    stage-then-rename (``fs.commit_staged``, shared by every commit log);
     reads pin ``v=N`` directories, which is what makes the history
     immutable under later writes."""
     from pyspark_big_data_spark.functions.aggregates import dsum

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyspark_big_data_spark import fs
 from pyspark_big_data_spark.functions import text as TX
 from pyspark_big_data_spark.io import read_table, write_parquet
 from pyspark_big_data_spark.queries.registry import register
@@ -92,8 +93,6 @@ def write_release_manifest(spark: SparkSession, out_path: str) -> dict:
     its data. Deliberately timestamp-free: the manifest is a pure
     function of the content, so re-materializing identical data yields
     a byte-identical manifest (asserted in tests)."""
-    import json
-
     from pyspark_big_data_spark.functions.text import hash48
 
     df = spark.read.parquet(out_path)
@@ -122,14 +121,7 @@ def write_release_manifest(spark: SparkSession, out_path: str) -> dict:
             for r in stats
         },
     }
-    payload = json.dumps(manifest, sort_keys=True, indent=1)
-    from pyspark_big_data_spark.operators.upsert import _fs
-
-    fs, _, jvm = _fs(spark, out_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    out = fs.create(Path(f"{out_path}/_MANIFEST.json"), True)
-    out.write(bytearray(payload.encode()))
-    out.close()
+    fs.write_json(spark, f"{out_path}/_MANIFEST.json", manifest)
     return manifest
 
 

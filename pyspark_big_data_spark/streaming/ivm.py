@@ -27,9 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyspark_big_data_spark import fs
 from pyspark_big_data_spark.io import read_table
 from pyspark_big_data_spark.operators.upsert import upsert_parquet
-from pyspark_big_data_spark.streaming.incremental_dedup import _index_exists
 
 _DEC = "decimal(38,8)"
 
@@ -68,7 +68,7 @@ def fold_revenue_batch(batch_lineitem: DataFrame, view_dir: str, sf_dir: str) ->
     """Fold one fact delta into the persisted view at ``view_dir``."""
     spark = batch_lineitem.sparkSession
     delta = _delta_agg(batch_lineitem, sf_dir)
-    if not _index_exists(spark, view_dir):
+    if not fs.exists(spark, view_dir):
         delta.write.mode("overwrite").parquet(view_dir)
         n = spark.read.parquet(view_dir).count()
         return {"updated": 0, "inserted": n, "total": n}

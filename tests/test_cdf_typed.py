@@ -260,12 +260,13 @@ def test_schema_evolution_null_fills_preimages(spark, tmp_path):
         assert StructType.fromJson(manifest(spark, root, v)["schema"]) == inferred, v
 
 
-@pytest.mark.parametrize("mutation", ["delete", "update"])
+@pytest.mark.parametrize("mutation", ["delete", "update", "merge", "append"])
 def test_row_mutations_keep_stats_pruning(spark, tmp_path, mutation):
-    """delete_where / update_where carry the head's stats_cols into
-    their commit: pruned reads keep working on every later head (and
-    equal the unpruned read plus the filter), and the delete-folding
-    rewrite still writes a stats manifest."""
+    """delete_where / update_where / merge_into / append_version given
+    no stats_cols carry the head's into their commit: pruned reads keep
+    working on every later head (and equal the unpruned read plus the
+    filter), and the delete-folding rewrite of a tombstone-bearing head
+    still writes a stats manifest."""
     from pyspark_big_data_spark.operators.deletes import materialize_deletes
     from pyspark_big_data_spark.operators.versioned import manifest
 
@@ -273,14 +274,20 @@ def test_row_mutations_keep_stats_pruning(spark, tmp_path, mutation):
     write_version(_base(spark, 40).repartitionByRange(4, "k"), root, stats_cols=["k"])
     if mutation == "delete":
         v = delete_where(spark, root, "k < 5")["version"]
-    else:
+    elif mutation == "update":
         v = update_where(spark, root, {"val": "val + 1"}, "k < 5")["version"]
+    elif mutation == "merge":
+        source = _base(spark, 50).filter("k < 5 OR k >= 40").withColumn("val", F.lit(-1.0))
+        v = merge_into(spark, root, source, "k")["version"]
+    else:
+        v = append_version(_base(spark, 50).filter("k >= 40"), root)
     assert manifest(spark, root, v)["stats_cols"] == ["k"]
     want = read_version_mor(spark, root).filter("k BETWEEN 3 AND 12")
     got = read_version_mor(spark, root, pruned_col="k", lower=3, upper=12)
     assert sorted(got.collect()) == sorted(want.collect())
-    folded = materialize_deletes(spark, root)
-    assert manifest(spark, root, folded)["stats_cols"] == ["k"]
+    if mutation != "append":  # an append leaves no tombstones to fold
+        folded = materialize_deletes(spark, root)
+        assert manifest(spark, root, folded)["stats_cols"] == ["k"]
 
 
 def test_delete_where_noop_and_update_where_noop(spark, tmp_path):

@@ -1,9 +1,9 @@
 """Offline compaction of the persisted incremental-dedup index: fewer
-files, identical probe semantics, crash-safe swap."""
+files, identical probe semantics (the swap rollback is tested in
+tests/test_fs.py)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from pyspark_big_data_spark.io import read_table
@@ -54,39 +54,3 @@ def test_compaction_reduces_files_and_preserves_pairs(spark, sf_dir, tmp_path):
     }
     assert pairs_a == pairs_b
     assert pairs_a  # non-degenerate: the probe actually found duplicates
-
-
-def test_compaction_swap_rolls_back_on_failure(spark, sf_dir, tmp_path, monkeypatch):
-    """If the move-into-place rename fails the original directory must
-    come back — a half-swapped index would read as EMPTY and silently
-    drop old x new pairs."""
-    docs = read_table(spark, sf_dir, "documents")
-    index_dir = str(tmp_path / "index")
-    process_document_batch(docs.limit(100), index_dir)
-    rows = spark.read.parquet(f"{index_dir}/sigs").count()
-
-    import tools.compact_index as CI
-
-    real_fs = CI._fs
-
-    def breaking_fs(spark_, path):
-        fs, hpath, jvm = real_fs(spark_, path)
-
-        class BrokenFs:
-            def __getattr__(self, name):
-                return getattr(fs, name)
-
-            def rename(self, src, dst):
-                # let the move-aside succeed, fail the move-into-place
-                if str(src).endswith(".compact_tmp"):
-                    return False
-                return fs.rename(src, dst)
-
-        return BrokenFs(), hpath, jvm
-
-    monkeypatch.setattr(CI, "_fs", breaking_fs)
-    with pytest.raises(RuntimeError, match="compaction swap failed"):
-        CI.compact_dataset(spark, f"{index_dir}/sigs")
-    monkeypatch.setattr(CI, "_fs", real_fs)
-    # original data rolled back into place and readable
-    assert spark.read.parquet(f"{index_dir}/sigs").count() == rows

@@ -69,11 +69,11 @@ def test_tag_create_detects_silent_overwrite(spark, tmp_path, monkeypatch):
 
     # loser path: simulate the overwrite window by making the read-back
     # observe a different writer's doc
-    real_read = refs_mod._read_json
+    real_read = refs_mod.read_json
     monkeypatch.setattr(
         refs_mod,
-        "_read_json",
-        lambda fs, jvm, p: {**real_read(fs, jvm, p), "writer": "someone-else"},
+        "read_json",
+        lambda spark_, p: {**real_read(spark_, p), "writer": "someone-else"},
     )
     with pytest.raises(ValueError, match="concurrently"):
         create_tag(spark, root, "raced", 0)

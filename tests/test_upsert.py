@@ -1,5 +1,5 @@
 """Keyed parquet upsert: replace/insert semantics, duplicate-key and
-schema guards, crash-safe swap rollback."""
+schema guards (the swap rollback is tested in tests/test_fs.py)."""
 
 from __future__ import annotations
 
@@ -64,36 +64,6 @@ def test_upsert_rejects_schema_mismatch(spark, sf_dir, tmp_path):
     bad = spark.read.parquet(path).limit(1).withColumn("extra", F.lit(1))
     with pytest.raises(ValueError, match="schema mismatch"):
         upsert_parquet(spark, path, bad, "c_custkey")
-
-
-def test_upsert_swap_rolls_back_on_failure(spark, sf_dir, tmp_path, monkeypatch):
-    path = _seed(spark, sf_dir, tmp_path)
-    rows = spark.read.parquet(path).count()
-
-    import pyspark_big_data_spark.operators.upsert as U
-
-    real_fs = U._fs
-
-    def breaking_fs(spark_, p):
-        fs, hpath, jvm = real_fs(spark_, p)
-
-        class BrokenFs:
-            def __getattr__(self, name):
-                return getattr(fs, name)
-
-            def rename(self, src, dst):
-                if str(src).endswith(".upsert_tmp"):
-                    return False
-                return fs.rename(src, dst)
-
-        return BrokenFs(), hpath, jvm
-
-    monkeypatch.setattr(U, "_fs", breaking_fs)
-    upd = spark.read.parquet(path).limit(1)
-    with pytest.raises(RuntimeError, match="upsert swap failed"):
-        upsert_parquet(spark, path, upd, "c_custkey")
-    monkeypatch.setattr(U, "_fs", real_fs)
-    assert spark.read.parquet(path).count() == rows
 
 
 def test_erase_keys_removes_and_is_idempotent(spark, sf_dir, tmp_path):

@@ -12,13 +12,13 @@ the band_no partitioning the probe-side pruning relies on.
 
     python tools/compact_index.py <index_dir> [--target-mb 128]
 
-Safety: the rewrite goes to {path}.compact_tmp first, then the old dir
-is moved aside and the tmp swapped in (pure renames — atomic on a
-HDFS-like FS per directory); the old dir is only deleted after the
-swap. A crash mid-swap leaves either the old or the new complete
+Safety: the rewrite goes to {path}.compact_tmp first, then
+``fs.swap_dir`` moves the old dir aside and the tmp in (pure renames —
+atomic on a HDFS-like FS per directory); the old dir is only deleted
+after the swap. A crash mid-swap leaves either the old or the new complete
 directory plus a leftover to clean up — never a half-written index the
-silent-empty-read contract (incremental_dedup._index_exists) would
-mistake for data.
+existence-probe contract (``fs.exists``: an index that exists is read,
+never guessed empty) would mistake for data.
 """
 
 from __future__ import annotations
@@ -28,26 +28,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+from pyspark_big_data_spark import fs  # noqa: E402
 
 
 def dataset_file_stats(spark, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) for a parquet dataset directory."""
-    fs, hpath, jvm = _fs(spark, path)
-    n, total = 0, 0
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        n += 1
-        total += st.getLen()
-    return n, total
+    sizes = fs.data_file_sizes(spark, path)
+    return len(sizes), sum(sizes)
 
 
 def compact_dataset(
@@ -64,7 +51,6 @@ def compact_dataset(
     # each hive partition lands in as few tasks as the size warrants.
     n_out = max(1, int(bytes_before / (target_mb * 1024 * 1024)) + 1)
     tmp = path.rstrip("/") + ".compact_tmp"
-    old = path.rstrip("/") + ".compact_old"
     if partition_by:
         writer = df.repartition(n_out, *[df[c] for c in partition_by]).write.partitionBy(
             *partition_by
@@ -72,16 +58,7 @@ def compact_dataset(
     else:
         writer = df.repartition(n_out).write
     writer.mode("overwrite").parquet(tmp)
-
-    fs, hpath, jvm = _fs(spark, path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(hpath, Path(old)):
-        raise RuntimeError(f"compaction swap failed: could not move {path} aside")
-    if not fs.rename(Path(tmp), hpath):
-        # roll back so the index stays usable
-        fs.rename(Path(old), hpath)
-        raise RuntimeError(f"compaction swap failed: could not move {tmp} into place")
-    fs.delete(Path(old), True)
+    fs.swap_dir(spark, tmp, path, "compaction")
 
     files_after, bytes_after = dataset_file_stats(spark, path)
     return {
